@@ -531,6 +531,7 @@ def token_budget_select(
     call ``aeon_mecha_spark.util.release_cached(result)`` once the
     result has been consumed, or cached blocks accumulate.
     """
+    from aeon_mecha_spark.operators.analytics import _bucket_offsets
     from aeon_mecha_spark.util import track_cached
 
     s = scored.filter(
@@ -541,10 +542,9 @@ def token_budget_select(
     s = s.persist()
     per_bucket = s.groupBy("_b").agg(F.sum(tokens_col).cast("long").alias("_bt"))
     # tiny table (≤ buckets+1 rows): the single-partition window is fine
-    wb = W.orderBy(F.col("_b").desc()).rowsBetween(W.unboundedPreceding, -1)
-    offsets = per_bucket.select(
-        "_b", F.coalesce(F.sum("_bt").over(wb), F.lit(0)).cast("long").alias("_off")
-    )
+    offsets = _bucket_offsets(
+        per_bucket, [], F.col("_b").desc(), {"_off": "_bt"}
+    ).select("_b", "_off")
     ww = W.partitionBy("_b").orderBy(F.col(score_col).desc(), F.col(id_col).asc())
     cum = (F.col("_off") + F.sum(tokens_col).over(ww)).cast("long")
     out = (

@@ -42,27 +42,90 @@ _NUMERIC_PREFIXES = (
 # (util.narrow_scan_bytes: every output row traces to a scanned row),
 # and a BYTES threshold is scale-adaptive (guide §2): any real input
 # beyond it — the 8×/64× probes, 100 TB partitions — takes the bucketed
-# path automatically. Tunable per session via
-# spark.aeon.grain.fastPathMaxBytes (0 disables the fast path).
+# path automatically.
 _GRAIN_FAST_MAX_BYTES = 128 * 1024 * 1024
 
 
 def _grain_provably_small(g: DataFrame) -> bool:
     from aeon_mecha_spark.util import narrow_scan_bytes
 
-    try:
-        limit = int(
-            g.sparkSession.conf.get(
-                "spark.aeon.grain.fastPathMaxBytes",
-                str(_GRAIN_FAST_MAX_BYTES),
-            )
-        )
-    except ValueError:
-        limit = _GRAIN_FAST_MAX_BYTES
-    if limit <= 0:
-        return False
     nb = narrow_scan_bytes(g)
-    return nb is not None and nb <= limit
+    return nb is not None and nb <= _GRAIN_FAST_MAX_BYTES
+
+
+def _value_bounds(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """Per-key ``(keys…, _mn, _mx)`` double bounds of ``value_col`` —
+    the default input of ``_linear_buckets``."""
+    return df.groupBy(*keys).agg(
+        F.min(F.col(value_col).cast("double")).alias("_mn"),
+        F.max(F.col(value_col).cast("double")).alias("_mx"),
+    )
+
+
+def _linear_buckets(
+    g: DataFrame,
+    keys: list[str],
+    value_col: str,
+    buckets: int,
+    mm: DataFrame | None = None,
+) -> DataFrame:
+    """Level one of the grain engines' two-level bucket scheme: tag
+    every row of ``g`` with ``_cb``, its bucket in ``[0, buckets)``
+    under the per-key min/max linear map of numeric ``value_col``.
+
+    The bucket id is clamped BY CONSTRUCTION and the map is monotone,
+    so bucket order refines value order exactly. ``mm`` (default
+    ``_value_bounds(g, …)``) may be any per-key ``(_mn, _mx)`` with
+    ``_mn ≤ min(value)`` and ``max(value) ≤ _mx`` — looser bounds only
+    unbalance buckets. The bounds join is keys-sized (AQE broadcasts
+    it); with no keys it is a broadcast cross join.
+    """
+    nb = int(buckets)
+    if mm is None:
+        mm = _value_bounds(g, keys, value_col)
+    bucket_of = F.when(
+        F.col("_mx") > F.col("_mn"),
+        F.least(
+            F.lit(nb - 1),
+            F.greatest(
+                F.lit(0),
+                F.floor(
+                    (F.col(value_col).cast("double") - F.col("_mn"))
+                    / (F.col("_mx") - F.col("_mn"))
+                    * nb
+                ).cast("int"),
+            ),
+        ),
+    ).otherwise(F.lit(0))
+    b = g.join(mm, keys) if keys else g.crossJoin(F.broadcast(mm))
+    return b.withColumn("_cb", bucket_of).drop("_mn", "_mx")
+
+
+def _bucket_offsets(
+    per_bucket: DataFrame,
+    keys: list[str],
+    bucket_order: Column,
+    offsets: dict[str, str],
+    totals: dict[str, str] | None = None,
+) -> DataFrame:
+    """Level two: the per-bucket offset window over a table of ≤
+    buckets rows per key. Adds, for each ``out: src`` in ``offsets``,
+    the sum of ``src`` over the key's strictly EARLIER buckets in
+    ``bucket_order`` (0 for the first bucket), and for each ``out:
+    src`` in ``totals`` the key's total of ``src``. Sources are long or
+    decimal(38,0), whose sums keep their type."""
+    wb = (
+        W.partitionBy(*keys)
+        .orderBy(bucket_order)
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    w_tot = W.partitionBy(*keys)
+    out = per_bucket
+    for name, src in offsets.items():
+        out = out.withColumn(name, F.coalesce(F.sum(src).over(wb), F.lit(0)))
+    for name, src in (totals or {}).items():
+        out = out.withColumn(name, F.sum(src).over(w_tot))
+    return out
 
 
 def _grain_prefix(
@@ -101,7 +164,7 @@ def _grain_prefix(
     computation. Same output, same hash, by construction. Two proofs
     engage it: the r14 file-size bound (``_grain_provably_small`` —
     lazy, from the driver's file listing, threshold
-    ``spark.aeon.grain.fastPathMaxBytes``), checked first; else
+    ``_GRAIN_FAST_MAX_BYTES``), checked first; else
     ``g.count() <= buckets`` (one cheap action against the
     already-persisted grain) when the caller did not pass
     ``grain_count``.
@@ -143,49 +206,17 @@ def _grain_prefix(
             ).withColumn(f"_tot{m}", F.sum(m).over(w_tot).cast(dtypes[m]))
         return out
 
-    nb = int(buckets)
-    mm = g.groupBy(*group_cols).agg(
-        F.min(F.col(value_col).cast("double")).alias("_mn"),
-        F.max(F.col(value_col).cast("double")).alias("_mx"),
-    )
-    bucket_of = F.when(
-        F.col("_mx") > F.col("_mn"),
-        F.least(
-            F.lit(nb - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor(
-                    (F.col(value_col).cast("double") - F.col("_mn"))
-                    / (F.col("_mx") - F.col("_mn"))
-                    * nb
-                ).cast("int"),
-            ),
-        ),
-    ).otherwise(F.lit(0))
-    if group_cols:
-        b = g.join(mm, group_cols)
-    else:
-        b = g.crossJoin(F.broadcast(mm))
-    b = b.withColumn("_cb", bucket_of).drop("_mn", "_mx")
+    b = _linear_buckets(g, group_cols, value_col, buckets)
     per_bucket = b.groupBy(*group_cols, "_cb").agg(
         *[F.sum(m).cast(dtypes[m]).alias(f"_b{m}") for m in measures]
     )
     # per-group ≤ buckets rows by construction (clamped bucket id)
     cb_order = F.col("_cb").asc() if ascending else F.col("_cb").desc()
-    wb = (
-        W.partitionBy(*group_cols)
-        .orderBy(cb_order)
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    w_tot = W.partitionBy(*group_cols)
     offs = per_bucket
     for m in measures:
-        offs = offs.withColumn(
-            f"_off{m}",
-            F.coalesce(
-                F.sum(f"_b{m}").over(wb), F.lit(0).cast(dtypes[m])
-            ).cast(dtypes[m]),
-        ).withColumn(f"_tot{m}", F.sum(f"_b{m}").over(w_tot).cast(dtypes[m]))
+        offs = _bucket_offsets(
+            offs, group_cols, cb_order, {f"_off{m}": f"_b{m}"}, {f"_tot{m}": f"_b{m}"}
+        )
     offs = offs.select(
         *group_cols,
         "_cb",
@@ -238,9 +269,9 @@ def _attach_doubled_rank(
     computing a value in place beats computing it elsewhere and
     re-attaching it with a shuffle join).
 
-    Scale path (numeric values): the same min/max linear bucket map as
-    ``_grain_prefix`` (clamped, monotone ⇒ bucket order refines value
-    order exactly); per-(keys, bucket) counts aggregate map-side into a
+    Scale path (numeric values): the ``_linear_buckets`` map (clamped,
+    monotone ⇒ bucket order refines value order exactly);
+    per-(keys, bucket) counts aggregate map-side into a
     ≤ keys×buckets offset table that broadcast-joins back, and the ONE
     grain-sized exchange is the per-(keys, bucket) window. Both range
     frames share that window's sort. Non-numeric values (where the
@@ -273,44 +304,17 @@ def _attach_doubled_rank(
         )
         return out if nv_col else out.drop(keep_nv)
 
-    nb = int(buckets)
-    mm = src.groupBy(*keys).agg(
-        F.min(F.col(value_col).cast("double")).alias("_mn"),
-        F.max(F.col(value_col).cast("double")).alias("_mx"),
-    )
-    bucket_of = F.when(
-        F.col("_mx") > F.col("_mn"),
-        F.least(
-            F.lit(nb - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor(
-                    (F.col(value_col).cast("double") - F.col("_mn"))
-                    / (F.col("_mx") - F.col("_mn"))
-                    * nb
-                ).cast("int"),
-            ),
-        ),
-    ).otherwise(F.lit(0))
-    if keys:
-        sb = src.join(mm, keys)  # AQE: keys-sized build side → broadcast
-        b = g.join(mm, keys)
-    else:
-        sb = src.crossJoin(F.broadcast(mm))
-        b = g.crossJoin(F.broadcast(mm))
+    # one bounds table for both sides keeps their bucket maps identical
+    mm = _value_bounds(src, keys, value_col)
     pb = (
-        sb.withColumn("_cb", bucket_of)
+        _linear_buckets(src, keys, value_col, buckets, mm)
         .groupBy(*keys, "_cb")
         .agg(F.sum(count_col).cast("long").alias("_bn"))
     )
-    w_off = (
-        W.partitionBy(*keys).orderBy(F.col("_cb").asc())
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offs = pb.withColumn(
-        "_off", F.coalesce(F.sum("_bn").over(w_off), F.lit(0).cast("long"))
+    offs = _bucket_offsets(
+        pb, keys, F.col("_cb").asc(), {"_off": "_bn"}
     ).select(*keys, "_cb", "_off")
-    b = b.withColumn("_cb", bucket_of).drop("_mn", "_mx")
+    b = _linear_buckets(g, keys, value_col, buckets, mm)
     if keys:
         j = b.join(offs, [*keys, "_cb"])  # ≤ keys×buckets build side
     else:
@@ -348,8 +352,8 @@ def _grain_type1_quantile(
 
     Plan — distributed SELECTION, not a full prefix sum: a quantile
     needs ONE rank per key, so after the per-(key, bucket) counts are
-    aggregated (same min/max linear bucket map as ``_grain_prefix`` —
-    any monotone map refines value order, so bucket order is exact),
+    aggregated (the ``_linear_buckets`` map — any monotone map refines
+    value order, so bucket order is exact),
     the single bucket whose cumulative range CONTAINS the rank is
     picked per key and only ITS ~grain/buckets rows are sorted (one
     keys-partitioned window over the filtered candidates). Equal
@@ -362,10 +366,9 @@ def _grain_type1_quantile(
     its laziness note).
 
     ``mm``: optional precomputed per-key bounds ``(keys…, _mn, _mx)``
-    (doubles). Any bounds with ``_mn ≤ min(value)`` and
-    ``max(value) ≤ _mx`` are EXACT — the bucket map clamps, so looser
-    bounds only unbalance buckets, never change the selected value.
-    Callers that can derive bounds from work they already do (e.g.
+    (doubles), forwarded to ``_linear_buckets``: any bounds that cover
+    the values are EXACT, looser ones only unbalance buckets. Callers
+    that can derive bounds from work they already do (e.g.
     ``mad_outliers``' deviation pass) pass them here to skip this
     function's own min/max aggregation pass. Ignored on the
     non-numeric fallback path. ``grain`` also need not be one row per
@@ -390,41 +393,13 @@ def _grain_type1_quantile(
             & ((F.col(f"_cum{count_col}") - F.col(count_col)) < rank)
         ).select(*keys, F.col(value_col).alias("q"))
 
-    nb = int(buckets)
-    if mm is None:
-        mm = grain.groupBy(*keys).agg(
-            F.min(F.col(value_col).cast("double")).alias("_mn"),
-            F.max(F.col(value_col).cast("double")).alias("_mx"),
-        )
-    bucket_of = F.when(
-        F.col("_mx") > F.col("_mn"),
-        F.least(
-            F.lit(nb - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor(
-                    (F.col(value_col).cast("double") - F.col("_mn"))
-                    / (F.col("_mx") - F.col("_mn"))
-                    * nb
-                ).cast("int"),
-            ),
-        ),
-    ).otherwise(F.lit(0))
-    if keys:
-        b = grain.join(mm, keys)  # AQE: keys-sized build side → broadcast
-    else:
-        b = grain.crossJoin(F.broadcast(mm))
-    b = b.withColumn("_cb", bucket_of).drop("_mn", "_mx")
+    b = _linear_buckets(grain, keys, value_col, buckets, mm)
     per_bucket = b.groupBy(*keys, "_cb").agg(
         F.sum(count_col).cast("long").alias("_bc")
     )
-    w_off = (
-        W.partitionBy(*keys).orderBy(F.col("_cb").asc())
-        .rowsBetween(W.unboundedPreceding, -1)
+    offs = _bucket_offsets(
+        per_bucket, keys, F.col("_cb").asc(), {"_off": "_bc"}, {"_tot": "_bc"}
     )
-    offs = per_bucket.withColumn(
-        "_off", F.coalesce(F.sum("_bc").over(w_off), F.lit(0).cast("long"))
-    ).withColumn("_tot", F.sum("_bc").over(W.partitionBy(*keys)))
     rank = F.expr(f"({num} * _tot + {den - 1}) div {den}")
     sel = offs.filter((F.col("_off") < rank) & (rank <= F.col("_off") + F.col("_bc"))).select(
         *keys, "_cb", "_off", rank.alias("_rk")
@@ -1009,13 +984,9 @@ def grouped_quantiles(
         bexpr = bexpr + (F.col(value_col) >= F.lit(b)).cast("int")
     bucketed = base0.withColumn("_b", bexpr)
     cnt = bucketed.groupBy(*keys, "_b").agg(F.count(F.lit(1)).alias("_c"))
-    wo = W.partitionBy(*keys).orderBy("_b").rowsBetween(W.unboundedPreceding, -1)
-    offsets = cnt.select(
-        *keys,
-        "_b",
-        F.coalesce(F.sum("_c").over(wo), F.lit(0)).alias("_off"),
-        F.sum("_c").over(W.partitionBy(*keys)).alias("_n"),
-    )
+    offsets = _bucket_offsets(
+        cnt, keys, F.col("_b"), {"_off": "_c"}, {"_n": "_c"}
+    ).select(*keys, "_b", "_off", "_n")
     wb = W.partitionBy(*keys, "_b").orderBy(F.col(value_col).asc())
     base = (
         bucketed.join(F.broadcast(offsets), [*keys, "_b"])
@@ -1367,10 +1338,7 @@ def mad_outliers(
     # aggregate and the (keys, _dev) re-aggregation exchange both
     # disappear. ``med`` persists (keys-sized) because the derived
     # bounds and the deviation rows reference it from several subtrees.
-    mm_v = grain.groupBy(*keys).agg(
-        F.min(F.col(value_col).cast("double")).alias("_mn"),
-        F.max(F.col(value_col).cast("double")).alias("_mx"),
-    )
+    mm_v = _value_bounds(grain, keys, value_col)
     med = (
         _grain_type1_quantile(
             grain, keys, value_col, "_n", 1, 2, buckets,
@@ -5095,7 +5063,6 @@ def trimmed_mean(
 
     if not 0 <= int(trim_ppm) < 500_000:
         raise ValueError("trim_ppm must be in [0, 500000)")
-    nb = int(value_buckets)
     base = df.filter(F.col(value_col).isNotNull()).select(
         *keys, F.col(value_col).cast("long").alias("_v")
     )
@@ -5146,44 +5113,17 @@ def trimmed_mean(
             ).alias("trimmed_mean_milli"),
         )
         return track_cached(out, g)
-    mm = g.groupBy(*keys).agg(
-        F.min(F.col("_v").cast("double")).alias("_mn"),
-        F.max(F.col("_v").cast("double")).alias("_mx"),
-    )
-    bucket_of = F.when(
-        F.col("_mx") > F.col("_mn"),
-        F.least(
-            F.lit(nb - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor(
-                    (F.col("_v").cast("double") - F.col("_mn"))
-                    / (F.col("_mx") - F.col("_mn"))
-                    * nb
-                ).cast("int"),
-            ),
-        ),
-    ).otherwise(F.lit(0))
-    if keys:
-        b = g.join(mm, keys)  # AQE: keys-sized build side -> broadcast
-    else:
-        b = g.crossJoin(F.broadcast(mm))
-    b = b.withColumn("_cb", bucket_of).drop("_mn", "_mx")
+    b = _linear_buckets(g, keys, "_v", value_buckets)
     pb = b.groupBy(*keys, "_cb").agg(
         F.sum("_n").cast("long").alias("_bn"),
         F.sum(F.expr("CAST(_v AS DECIMAL(38,0)) * _n")).alias("_bs"),
     )
-    w_off = (
-        W.partitionBy(*keys).orderBy(F.col("_cb").asc())
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    w_tot = W.partitionBy(*keys)
-    zero_d = F.lit(0).cast("decimal(38,0)")
-    offs = (
-        pb.withColumn("_off_n", F.coalesce(F.sum("_bn").over(w_off), F.lit(0).cast("long")))
-        .withColumn("_off_s", F.coalesce(F.sum("_bs").over(w_off), zero_d).cast("decimal(38,0)"))
-        .withColumn("_tot_n", F.sum("_bn").over(w_tot))
-        .withColumn("_tot_s", F.sum("_bs").over(w_tot).cast("decimal(38,0)"))
+    offs = _bucket_offsets(
+        pb,
+        keys,
+        F.col("_cb").asc(),
+        {"_off_n": "_bn", "_off_s": "_bs"},
+        {"_tot_n": "_bn", "_tot_s": "_bs"},
     )
     k = F.expr(f"(_tot_n * {int(trim_ppm)}) div 1000000")
     offs = offs.withColumn("_k", k).withColumn("_hi", F.expr("_tot_n - _k"))

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from pyspark import StorageLevel
 
-from aeon_mecha_spark.util import track_cached
+from aeon_mecha_spark.util import LocalCheckpointHandle, track_cached
 
 
 def transition_edges(
@@ -306,11 +306,19 @@ def bradley_terry_int(
     Plan: one groupBy builds the symmetric pair-count table, one the
     win counts; each round is two keyed joins (strengths onto both
     endpoints) + one partial-aggregated sum — the PageRank shape. The
-    loop-invariant tables (``sym``, win stats) and each round's
-    strength table are persisted (the k-core pattern), so the physical
-    plan is LINEAR in ``iters`` instead of exponential lineage growth —
-    no driver actions; the persisted handles ride on the result via
-    ``track_cached`` for explicit release.
+    loop-invariant tables (``sym``, win stats) are persisted (the
+    k-core pattern). Each round's strength table is cut to a leaf with
+    a LAZY ``localCheckpoint`` (the :func:`hits_int` pattern): a
+    persisted round is referenced twice by the next one, and every
+    plan string Spark builds (explain, the AQE update events of a
+    collect) re-prints a cached relation's plan per reference, so
+    persisted rounds grew those strings 2^iters-fold — measured to
+    exhaust a 4 GB driver heap at 8 rounds. With checkpointed rounds
+    the plan is constant-size in ``iters``; under AQE the checkpoints
+    plan each round's stages (and run its jobs) while the next round
+    is built. Handles ride on the result via ``track_cached`` —
+    release them with ``release_cached`` only once the result is
+    final (checkpointed lineage is truncated).
 
     Output: ``(node, n_wins, n_matches, strength_milli)`` for every
     player that appears in a match.
@@ -399,10 +407,8 @@ def bradley_terry_int(
                 GROUP BY c._i
             ) d ON s._i = d._i
             """
-        ).persist(
-            StorageLevel.MEMORY_ONLY  # truncate lineage: plan stays linear in iters
-        )
-        cached.append(p)
+        ).localCheckpoint(eager=False)
+        cached.append(LocalCheckpointHandle(p))
     n_matches = sym.groupBy("_i").agg(F.sum("_n").cast("long").alias("_nm"))
     out = (
         stats.join(n_matches, "_i")

@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aeon_mecha_spark.functions.time import chunk_start
 from aeon_mecha_spark.operators.sessionize import derive_chunks, derive_epochs
 from aeon_mecha_spark.operators.stats import column_stats_exprs
 from aeon_mecha_spark.pipeline.orchestrator import Table, Tier
@@ -57,12 +58,10 @@ def stream_summary(
     count + per-column stats. chunk_start = hour floor of the sample
     time; ties to the chunk table by (keys, chunk_start)."""
     keys = list(keys)
-    floor = F.date_trunc("hour", F.col(time_col))
     # first chunk of an epoch starts at epoch_start, not the hour floor
     # (acquisition.py:500-506) — clamp when the stream carries its epoch
-    if "epoch_start" in stream_df.columns:
-        floor = F.greatest(floor, F.col("epoch_start"))
-    with_chunk = stream_df.withColumn("chunk_start", floor)
+    epoch = F.col("epoch_start") if "epoch_start" in stream_df.columns else None
+    with_chunk = stream_df.withColumn("chunk_start", chunk_start(F.col(time_col), epoch))
     exprs = [F.count(F.lit(1)).alias("sample_count")]
     for c in value_cols:
         exprs.extend(column_stats_exprs(c))
@@ -83,14 +82,15 @@ def write_stream_table(
     out = df.withColumn("chunk_date", F.to_date(F.col(time_col)))
     t = Table(name, pk=[time_col], root=root, tier=Tier.IMPORTED, partition_by=["chunk_date"])
     # dynamic partition overwrite: re-running ingestion replaces exactly
-    # the partitions it produces — idempotent without a PK anti-join
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("chunk_date").parquet(t.path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the partitions it produces — idempotent without a PK anti-join. A
+    # writer option, so the session conf (shared with concurrent writes)
+    # is never touched
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("chunk_date")
+        .parquet(t.path)
+    )
     return t
 
 

@@ -19,6 +19,18 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM, capped at 16 GB. A local JVM heap
+    larger than the host lets one oversized job grow the JVM until the
+    OS kills it, taking the session down; within RAM the job fails
+    alone with a Java OutOfMemoryError."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "16g"
+    return f"{max(1024, min(16 * 1024, (ram // 4) >> 20))}m"
+
+
 def get_spark(
     app_name: str = "aeon_mecha_spark",
     master: str | None = None,
@@ -69,7 +81,10 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -31,7 +31,8 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aeon_mecha_spark.sources.readers import HARP_EPOCH_OFFSET_S, Reader, decode_binary
+from aeon_mecha_spark.functions.time import harp_to_timestamp
+from aeon_mecha_spark.sources.readers import Reader, decode_binary
 
 _CHUNK_TS_RE = re.compile(r"_(\d{4}-\d{2}-\d{2}T\d{2}-\d{2}-\d{2})\.")
 
@@ -167,9 +168,7 @@ def load(
         )
         df = spark.read.csv(paths, schema=schema, header=True)
         df = df.select(
-            F.timestamp_micros(
-                F.round((F.col("aeon_time") + F.lit(float(HARP_EPOCH_OFFSET_S))) * 1e6, 0).cast("long")
-            ).alias("time"),
+            harp_to_timestamp(F.col("aeon_time")).alias("time"),
             *[F.col(c) for c in reader.columns],
         )
     else:

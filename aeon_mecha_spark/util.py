@@ -70,15 +70,16 @@ class LocalCheckpointHandle:
 # (explode), Expand (rollup/grouping sets), mapInPandas/FlatMap and
 # InMemoryRelation/LogicalRDD (opaque upstream) are deliberately absent;
 # so is Union, because DataFrame.inputFiles() DEDUPES file paths and a
-# self-union would undercount its bytes 2x. Every allowed node is unary,
-# so a passing plan has exactly one leaf scan and the byte count is
-# exact.
+# self-union would undercount its bytes 2x, and so is Sample, because
+# sampling WITH replacement at fraction > 1 repeats rows. Every allowed
+# node is unary, so a passing plan has exactly one leaf scan and the
+# byte count is exact.
 _ROW_BOUNDED = frozenset(
     (
         "Relation", "Project", "Filter", "Aggregate", "Sort", "Window",
         "Deduplicate", "Distinct", "GlobalLimit", "LocalLimit", "Limit",
         "Repartition", "RepartitionByExpression", "SubqueryAlias",
-        "Sample", "WithColumns", "WithColumnsRenamed",
+        "WithColumns", "WithColumnsRenamed",
     )
 )
 
@@ -111,8 +112,9 @@ def narrow_scan_bytes(df: DataFrame) -> int | None:
         jplan = df._jdf.queryExecution().analyzed()
         plan = jplan.toString()
         for line in plan.splitlines():
+            # a line the regex cannot name is an unknown node too
             m = re.match(r"^[\s:+|-]*'?([A-Za-z]+)", line)
-            if m and m.group(1) not in _ROW_BOUNDED:
+            if not m or m.group(1) not in _ROW_BOUNDED:
                 return None
         leaves = jplan.collectLeaves()
         total = 0

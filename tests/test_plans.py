@@ -495,13 +495,15 @@ def test_q168_seasonal_medians_broadcast(spark, entry, sf_dir):
     assert "SortMergeJoin" not in p
 
 
-def test_q169_lift_two_level_bucketed(spark, entry, sf_dir):
+def test_q169_lift_two_level_bucketed(spark, entry, sf_dir, monkeypatch):
     """Cardinality-adaptive prefix sum (round 9): at gate scale the
     distinct-score grain is provably <= score_buckets, so the bucket
     level is SKIPPED (no _cb partitioning — 2-3 fewer stages); forcing
-    a tiny bucket count must re-engage the two-level path with the
-    within-bucket window PARTITIONED by the coarse bucket. No
-    sort-merge join on either path."""
+    a tiny bucket count, with the file-size fast path bound at 0, must
+    re-engage the two-level path with the within-bucket window
+    PARTITIONED by the coarse bucket. No sort-merge join on either
+    path."""
+    from aeon_mecha_spark.operators import analytics
     from aeon_mecha_spark.operators.analytics import lift_table
     from pyspark.sql import functions as F
 
@@ -510,6 +512,9 @@ def test_q169_lift_two_level_bucketed(spark, entry, sf_dir):
     assert "hashpartitioning(_cb" not in p  # fast path: no bucket level
     assert p.count("HashAggregate") >= 2
 
+    # the scan is provably small, which takes the fast path before the
+    # bucket count is consulted
+    monkeypatch.setattr(analytics, "_GRAIN_FAST_MAX_BYTES", 0)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     forced = lift_table(
         docs, F.col("source") == "src0", "n_chars",

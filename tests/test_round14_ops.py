@@ -168,14 +168,17 @@ def test_attach_doubled_rank_exposes_tie_total(spark):
     assert got == {(5, 2): 5, (5, 3): 5, (8, 1): 1}
 
 
-def test_grain_fast_path_matches_bucketed(spark, sf_dir):
-    """The r14 file-size fast path (spark.aeon.grain.fastPathMaxBytes)
-    picks a single-window plan for provably-small scans; the bucketed
-    plan must produce IDENTICAL rows. Compare both paths on real
-    parquet gates across every grain engine (_grain_prefix via cliffs,
-    _attach_doubled_rank via kruskal, _grain_type1_quantile via
-    brown-forsythe, and trimmed_mean's own fast path)."""
+def test_grain_fast_path_matches_bucketed(spark, sf_dir, monkeypatch):
+    """The r14 file-size fast path (scans of at most
+    ``analytics._GRAIN_FAST_MAX_BYTES`` bytes) picks a single-window
+    plan for provably-small scans; the bucketed plan must produce
+    IDENTICAL rows. Compare both paths on real parquet gates across
+    every grain engine (_grain_prefix via cliffs, _attach_doubled_rank
+    via kruskal, _grain_type1_quantile via brown-forsythe, and
+    trimmed_mean's own fast path); the bound is patched to 0 to force
+    the bucketed path."""
     import __spark_entry__ as entry
+    from aeon_mecha_spark.operators import analytics
     from aeon_mecha_spark.util import release_cached
 
     qs = entry.queries()
@@ -183,20 +186,20 @@ def test_grain_fast_path_matches_bucketed(spark, sf_dir):
                  "q254_brown_forsythe", "q247_trimmed_mean",
                  "q208_mannwhitney"):
         rows = {}
-        for mode, val in (("on", str(128 << 20)), ("off", "0")):
-            spark.conf.set("spark.aeon.grain.fastPathMaxBytes", val)
+        for mode, bound in (("on", 128 << 20), ("off", 0)):
+            monkeypatch.setattr(analytics, "_GRAIN_FAST_MAX_BYTES", bound)
             spark.catalog.clearCache()
             df = qs[name](spark, sf_dir)
             rows[mode] = sorted(map(tuple, df.collect()))
             release_cached(df)
-        spark.conf.unset("spark.aeon.grain.fastPathMaxBytes")
         assert rows["on"] == rows["off"], name
 
 
 def test_narrow_scan_bytes_soundness(spark, sf_dir):
     """narrow_scan_bytes must return bytes only for row-bounded plans
     over local file scans, and None whenever a node could multiply rows
-    (join, explode, rollup/Expand) or the leaf is not a file scan."""
+    (join, explode, rollup/Expand, sampling with replacement) or the
+    leaf is not a file scan."""
     import os
     from pyspark.sql import functions as F
     from aeon_mecha_spark.util import narrow_scan_bytes
@@ -215,6 +218,8 @@ def test_narrow_scan_bytes_soundness(spark, sf_dir):
         li.select(F.explode(F.array(F.lit(1), F.lit(2))))
     ) is None
     assert narrow_scan_bytes(li.rollup("l_returnflag").count()) is None
+    # with replacement, fraction > 1 repeats rows
+    assert narrow_scan_bytes(li.sample(True, 2.0, seed=1)) is None
     assert narrow_scan_bytes(
         spark.createDataFrame([(1,)], "a int")
     ) is None

@@ -74,9 +74,10 @@ def test_bradley_terry_dominant_player_ranks_first(spark):
 
 
 def test_bradley_terry_plan_linear_in_iters(spark):
-    """Each MM round persists its strength table, so the FINAL physical
-    plan reads cached rounds (InMemoryTableScan) instead of unrolling
-    the whole lineage — raising ``iters`` must not explode the plan."""
+    """Each MM round's strength table is a checkpointed leaf and the
+    loop-invariant tables are cached (InMemoryTableScan), so the FINAL
+    physical plan does not unroll the whole lineage — raising ``iters``
+    must not explode the plan."""
     from aeon_mecha_spark.operators.graph import bradley_terry_int
     from aeon_mecha_spark.util import release_cached
 
@@ -92,10 +93,10 @@ def test_bradley_terry_plan_linear_in_iters(spark):
         out.explain("formatted")
     plan = buf.getvalue()
     assert "InMemoryTableScan" in plan
-    # DISTINCT numbered plan nodes (the display re-prints each cached
-    # round's inner plan per reference, so raw string counts are
-    # exponential; the node-id space is the true plan size): linear in
-    # iters — ~40/round — NOT the pre-fix exponential lineage unroll
+    # DISTINCT numbered plan nodes (the display re-prints a cached
+    # relation's inner plan per reference, so raw string counts can be
+    # exponential; the node-id space is the true plan size): at most
+    # linear in iters — ~40/round — NOT the exponential lineage unroll
     n_nodes = len(set(re.findall(r"\((\d+)\)", plan)))
     assert n_nodes <= 60 * 8
     # still numerically identical to the unpersisted mirror
